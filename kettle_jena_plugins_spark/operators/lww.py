@@ -8,16 +8,18 @@ arrival order with a declared total order ``(ts, lsn)`` (north rule) so replay
 is deterministic under shuffling, out-of-order delivery, and duplicates.
 
 Scale design:
-- The default implementation is AGGREGATION-based (``max_by`` over an ordering
-  struct), NOT window+row_number: hash aggregation gets map-side partial
-  aggregation (partial ``max_by`` per input partition before the shuffle), so
-  with u updates/key only ~n_keys rows cross the wire instead of all n_events.
-  A window would sort entire key partitions and ship every row.
-- ``lww_reduce_salted`` adds an explicit two-phase pre-reduction keyed on
-  (key, salt) for hot-conversation skew (north rule). Phase 1 shrinks each hot
-  key to SALT rows; phase 2 is a tiny final reduce. Salting only touches the
-  pre-aggregation; the final reduce is unsalted per (conv_id, turn_idx), so
-  LWW semantics are unchanged (max is associative/commutative).
+- The implementation is AGGREGATION-based (one ``max(struct)`` whose
+  leading fields are the order), NOT window+row_number: hash aggregation
+  gets map-side partial aggregation (a partial max per input partition
+  before the shuffle), so with u updates/key only ~n_keys rows cross the
+  wire instead of all n_events. A window would sort entire key partitions
+  and ship every row.
+- ``lww_reduce(salt_buckets=N)`` adds an explicit two-phase pre-reduction
+  keyed on (key, salt) for hot-conversation skew (north rule). Phase 1
+  shrinks each hot key to SALT rows; phase 2 is a tiny final reduce.
+  Salting only touches the pre-aggregation; the final reduce is unsalted per
+  (conv_id, turn_idx), so LWW semantics are unchanged (max is
+  associative/commutative).
 - Determinism: the ordering struct is (ts, lsn, op) — lsn is unique per event
   in a well-formed log; duplicates (same lsn redelivered) carry identical
   payloads, and `op` breaks any residual tie totally for byte-identical replay.
@@ -37,6 +39,7 @@ def lww_reduce(
     changes: DataFrame,
     keys: Sequence[str] = MERGE_KEYS,
     order: Sequence[str] = LWW_ORDER,
+    salt_buckets: int | None = None,
 ) -> DataFrame:
     """One row per key: the event that wins under the (ts, lsn) total order.
 
@@ -49,6 +52,10 @@ def lww_reduce(
     ``max_by(payload_struct, order_struct)`` at high thread counts (half the
     struct allocations per row), and any residual tie (malformed logs with
     duplicate (ts,lsn,op)) resolves deterministically by payload comparison.
+
+    ``salt_buckets``: two-phase form for hot-key skew — pre-reduce on
+    (keys, salt), then reduce on keys. Correct because the struct max over
+    a total order is associative.
     """
     payload = [c for c in changes.columns if c not in keys]
     lead = [*order, "op"]
@@ -56,33 +63,19 @@ def lww_reduce(
     winner = F.max(
         F.struct(*[F.col(c) for c in lead], *[F.col(c) for c in rest])
     ).alias("w")
-    agg = changes.groupBy(*[F.col(k) for k in keys]).agg(winner)
+    grouping = [F.col(k) for k in keys]
+    if salt_buckets:
+        changes = changes.withColumn(
+            "__salt",
+            F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(salt_buckets)),
+        )
+        changes = (
+            changes.groupBy(*grouping, F.col("__salt"))
+            .agg(winner)
+            .select(*keys, *[F.col(f"w.{c}").alias(c) for c in payload])
+        )
+    agg = changes.groupBy(*grouping).agg(winner)
     return agg.select(*keys, *[F.col(f"w.{c}").alias(c) for c in payload])
-
-
-def lww_reduce_salted(
-    changes: DataFrame,
-    keys: Sequence[str] = MERGE_KEYS,
-    order: Sequence[str] = LWW_ORDER,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Two-phase LWW for hot-key skew: pre-reduce on (keys, salt), then reduce
-    on keys. Correct because max_by over a total order is associative."""
-    payload = [c for c in changes.columns if c not in keys]
-    lead = [*order, "op"]
-    rest = [c for c in payload if c not in lead]
-    winner = F.max(
-        F.struct(*[F.col(c) for c in lead], *[F.col(c) for c in rest])
-    ).alias("w")
-    salted = changes.withColumn(
-        "__salt", F.pmod(F.xxhash64(*[F.col(c) for c in order]), F.lit(salt_buckets))
-    )
-    phase1 = (
-        salted.groupBy(*[F.col(k) for k in keys], F.col("__salt"))
-        .agg(winner)
-        .select(*keys, *[F.col(f"w.{c}").alias(c) for c in payload])
-    )
-    return lww_reduce(phase1, keys=keys, order=order)
 
 
 def lww_reduce_partial(
@@ -116,14 +109,16 @@ def lww_reduce_partial(
       tombstone;
     - the row exists iff any I/U event is newer than the latest
       tombstone (so a post-delete partial update revives the row with
-      only its own cells — older cells stay dead).
+      only its own cells — older cells stay dead);
+    - newer means strictly greater: a D and a U with equal (ts, lsn)
+      resolve to D here, where whole-row lww_reduce picks U (op 'U' > 'D').
 
     Scale design: ONE hash aggregation — per-column filtered
     ``max(struct(order, value))`` plus the tombstone/liveness maxes —
     so map-side partial aggregation applies to every cell column and
     only ~n_keys rows cross the wire, exactly like lww_reduce. No
     window, no second shuffle, no Python. ``salt_buckets`` adds the
-    same two-phase pre-reduction as lww_reduce_salted for hot-key skew
+    same two-phase pre-reduction as lww_reduce for hot-key skew
     — valid here because every aggregate (tombstone, liveness, per-cell
     winner) is an associative max over its own struct, so phase 1 on
     (keys, salt) keeps per-cell orders intact and phase 2 just maxes
@@ -277,9 +272,5 @@ def lww_state(
     incremental MERGE sink — convergence between the two is the core
     correctness invariant (tests/test_merge_target.py).
     """
-    reduced = (
-        lww_reduce_salted(changes, keys, order)
-        if salted
-        else lww_reduce(changes, keys, order)
-    )
+    reduced = lww_reduce(changes, keys, order, salt_buckets=16 if salted else None)
     return reduced.filter(F.col("op") != "D")

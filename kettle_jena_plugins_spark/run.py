@@ -68,6 +68,21 @@ def _add_gen_knobs(p: argparse.ArgumentParser) -> None:
     p.add_argument("--seed", type=int, default=42)
 
 
+def _partial_set_col(ap: argparse.ArgumentParser, args) -> str | None:
+    """The set-columns mask for ingest/stream input, or None for whole rows.
+    PARTIAL_DIALECTS (mongo) always apply through the cell-level merge —
+    whole-row LWW over $set patches would null untouched cells;
+    --partial-images opts wal2json in."""
+    from .sources.envelopes import PARTIAL_DIALECTS, SPARSE_DIALECTS
+
+    if args.partial_images and args.dialect not in SPARSE_DIALECTS:
+        ap.error("--partial-images requires a sparse-capable dialect "
+                 f"({', '.join(SPARSE_DIALECTS)})")
+    if args.partial_images or args.dialect in PARTIAL_DIALECTS:
+        return "set_cols"
+    return None
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="kettle_jena_plugins_spark.run")
     ap.add_argument("--master", default=None)
@@ -275,20 +290,10 @@ def main(argv: list[str] | None = None) -> int:
                 "--source-table/--payload-cols require --dialect "
                 "(they only apply to envelope input)"
             )
-        from .sources.envelopes import PARTIAL_DIALECTS
-
-        stream_partial = (
-            args.partial_images or args.dialect in PARTIAL_DIALECTS
-        )
-        if args.partial_images and args.dialect not in (
-            "wal2json", *PARTIAL_DIALECTS
-        ):
-            ap.error("--partial-images requires a sparse-capable dialect "
-                     f"(wal2json, {', '.join(PARTIAL_DIALECTS)})")
         tgt = ParquetLakeTarget(spark, args.table, mode=mode)
         cfg = CDCConfig(
             salted=args.salted, metrics_path=args.metrics,
-            partial_set_col="set_cols" if stream_partial else None,
+            partial_set_col=_partial_set_col(ap, args),
         )
         t0 = time.time()
         from .sources.envelopes import extended_payload_schema
@@ -327,42 +332,15 @@ def main(argv: list[str] | None = None) -> int:
             if args.payload_cols
             else None
         )
-        from .sources.envelopes import PARTIAL_DIALECTS
-
-        # mongo's wire format is inherently sparse: the cell-level merge
-        # is forced, --partial-images or not (whole-row LWW over $set
-        # patches would null untouched cells)
-        partial = args.partial_images or args.dialect in PARTIAL_DIALECTS
-        if args.partial_images and args.dialect not in (
-            "wal2json", *PARTIAL_DIALECTS
-        ):
-            ap.error("--partial-images requires a sparse-capable dialect "
-                     f"(wal2json, {', '.join(PARTIAL_DIALECTS)})")
-        if partial:
-            if args.dialect == "wal2json":
-                from .sources.wal2json import parse_wal2json
-
-                events = parse_wal2json(
-                    raw, table=args.source_table, payload_schema=ps,
-                    set_cols_col="set_cols",
-                )
-            else:  # mongo — the parser always emits the mask
-                events = parse_envelope(
-                    raw, args.dialect, table=args.source_table,
-                    payload_schema=ps,
-                )
-            cfg = CDCConfig(
-                salted=args.salted, dead_letter_dir=args.dead_letter,
-                partial_set_col="set_cols",
-            )
-        else:
-            events = parse_envelope(
-                raw, args.dialect, table=args.source_table,
-                payload_schema=ps,
-            )
-            cfg = CDCConfig(
-                salted=args.salted, dead_letter_dir=args.dead_letter
-            )
+        set_col = _partial_set_col(ap, args)
+        events = parse_envelope(
+            raw, args.dialect, table=args.source_table, payload_schema=ps,
+            set_cols_col=set_col,
+        )
+        cfg = CDCConfig(
+            salted=args.salted, dead_letter_dir=args.dead_letter,
+            partial_set_col=set_col,
+        )
         res = apply_batch(tgt, events, args.batch_id, cfg)
         print(json.dumps(res.__dict__, default=str))
     elif args.cmd == "state":
@@ -539,7 +517,11 @@ def main(argv: list[str] | None = None) -> int:
         elif args.input.startswith("envelopes:"):
             # envelopes:DIALECT:PATH — raw wire-format JSON lines as the
             # pipeline input (the .ktr lifecycle over a topic dump)
-            from .sources.envelopes import parse_envelope
+            from .sources.envelopes import (
+                PARTIAL_DIALECTS,
+                parse_envelope,
+                sparse_dialect_message,
+            )
 
             parts = args.input.split(":", 2)
             if len(parts) != 3 or not parts[2]:
@@ -547,6 +529,10 @@ def main(argv: list[str] | None = None) -> int:
                     "--input envelope form is envelopes:DIALECT:PATH "
                     f"(got {args.input!r})"
                 )
+            # pipeline steps see whole rows: sparse patches would read
+            # their untouched cells as nulls
+            if parts[1] in PARTIAL_DIALECTS:
+                ap.error(sparse_dialect_message(parts[1]))
             df = parse_envelope(spark.read.text(parts[2]), parts[1])
         else:
             df = spark.read.parquet(args.input)

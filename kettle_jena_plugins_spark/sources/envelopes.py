@@ -34,14 +34,15 @@ from .maxwell import parse_maxwell, to_maxwell_json
 from .mongo import parse_mongo_oplog, to_mongo_oplog
 from .wal2json import parse_wal2json, to_wal2json
 
-#: dialect name → (parser, supports in-stream table filtering)
+#: dialect name → (parser, supports in-stream table filtering, can emit
+#: the set-columns mask)
 _DIALECTS = {
-    "debezium": (parse_debezium, False),
-    "dms": (parse_dms, True),
-    "maxwell": (parse_maxwell, True),
-    "mongo": (parse_mongo_oplog, True),
-    "wal2json": (parse_wal2json, True),
-    "canal": (parse_canal, True),
+    "debezium": (parse_debezium, False, False),
+    "dms": (parse_dms, True, False),
+    "maxwell": (parse_maxwell, True, False),
+    "mongo": (parse_mongo_oplog, True, True),
+    "wal2json": (parse_wal2json, True, True),
+    "canal": (parse_canal, True, False),
 }
 
 #: dialects whose wire format is inherently SPARSE: their parsers emit
@@ -52,6 +53,19 @@ PARTIAL_DIALECTS = ("mongo",)
 
 DIALECTS = tuple(sorted(_DIALECTS))
 
+#: dialects that can emit the set-columns mask (parse_envelope set_cols_col)
+SPARSE_DIALECTS = tuple(d for d in DIALECTS if _DIALECTS[d][2])
+
+
+def sparse_dialect_message(dialect: str) -> str:
+    """Why a PARTIAL_DIALECTS stream cannot be consumed as whole rows."""
+    return (
+        f"dialect {dialect!r} emits sparse row images (a set-columns "
+        "mask): apply it through the cell-level merge "
+        "(CDCConfig.partial_set_col; the CLI's ingest and stream do) — "
+        "whole-row LWW would null untouched cells"
+    )
+
 
 def parse_envelope(
     raw: DataFrame,
@@ -59,6 +73,7 @@ def parse_envelope(
     value_col: str = "value",
     table: str | None = None,
     payload_schema=None,
+    set_cols_col: str | None = None,
 ) -> DataFrame:
     """Raw envelope JSON strings → canonical change events, by dialect.
 
@@ -85,9 +100,13 @@ def parse_envelope(
     mid-stream schema evolution: from_json drops fields its schema does
     not name, so an evolved producer's new column needs the extended
     schema here to reach the lake's ALTER path (plans/evolution.py).
+
+    ``set_cols_col`` names the set-columns mask column for partial row
+    images (SPARSE_DIALECTS only; others raise). Mongo emits the mask
+    whether or not it is given, as ``set_cols`` by default.
     """
     try:
-        parser, filterable = _DIALECTS[dialect]
+        parser, filterable, sparse = _DIALECTS[dialect]
     except KeyError:
         raise ValueError(
             f"unknown dialect {dialect!r}; expected one of {DIALECTS}"
@@ -95,6 +114,13 @@ def parse_envelope(
     kw = {"value_col": value_col}
     if payload_schema is not None:
         kw["payload_schema"] = payload_schema
+    if set_cols_col is not None:
+        if not sparse:
+            raise ValueError(
+                f"dialect {dialect!r} carries whole row images: partial "
+                f"images need a sparse-capable dialect ({', '.join(SPARSE_DIALECTS)})"
+            )
+        kw["set_cols_col"] = set_cols_col
     if table is None:
         return parser(raw, **kw)
     if not filterable:

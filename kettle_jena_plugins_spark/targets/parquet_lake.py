@@ -23,23 +23,28 @@ Layout (table root):
                                                   watermarks, batch metrics
     _snapshots/CURRENT                            atomic pointer (os.replace)
 
-Write modes:
-    cow — each merge unions the affected buckets with the batch, re-reduces
-          LWW, rewrites those buckets (read-optimal, write-amplified).
-    mor — each merge appends a batch-local LWW-reduced DELTA layer to the
-          affected buckets (write cost O(batch), independent of table size);
-          reads resolve LWW across layers; buckets exceeding
-          compact_threshold layers are compacted inline (amortized O(1)
-          rewrites per layer). This is the high-throughput CDC path —
-          the analogue of Iceberg's merge-on-read MERGE mode.
+One merge path (merge_batch): each batch is one LWW reduce, one bucketed
+write and one manifest commit. The path branches in two places only:
+    read the target? — yes on COW and for partial row images (the affected
+          buckets' committed rows join the reduce; their per-bucket batch
+          stats are computed first, to prune the read); no for whole rows
+          on MOR, where the write is the batch's only Spark action and its
+          stats come from observe() plus the written files' footers.
+    what do the new files do? — cow: replace the affected buckets
+          (read-optimal, write-amplified). mor: append a DELTA layer
+          (write cost O(batch), independent of table size); reads resolve
+          LWW across layers, and buckets past compact_threshold layers are
+          compacted inline (amortized O(1) rewrites per layer). MOR is the
+          high-throughput CDC path — the analogue of Iceberg's
+          merge-on-read MERGE mode.
 
 Correctness under both modes rests on the same invariant: the visible row
 set equals LWW over (ts, lsn, op) of everything ever written, with deletes
 as tombstones so late updates older than an applied delete lose.
 
-Scale notes: merges touch only affected buckets; the LWW is the agg-based
-reduce with map-side partial aggregation; tombstones bound late-data
-correctness without unbounded streaming state; MOR bounds write
+Scale notes: merges touch only affected buckets; the LWW is the single
+max(struct) aggregate with map-side partial aggregation; tombstones bound
+late-data correctness without unbounded streaming state; MOR bounds write
 amplification at high batch rates.
 """
 
@@ -51,12 +56,12 @@ import shutil
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import LWW_ORDER, MERGE_KEYS, TRANSCRIPTS_SCHEMA
-from ..operators.lww import lww_reduce, lww_reduce_salted
+from ..operators.lww import lww_reduce, lww_reduce_partial
 
 INTERNAL_COLS = ("_lsn", "_deleted")
 
@@ -148,7 +153,10 @@ class ParquetLakeTarget:
         return {k: int(v) for k, v in self.manifest().get("watermarks", {}).items()}
 
     def schema(self) -> T.StructType:
-        m = self.manifest()
+        return self._schema_of(self.manifest())
+
+    @staticmethod
+    def _schema_of(m: dict) -> T.StructType:
         return T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
 
     def _commit(self, manifest: dict) -> int:
@@ -253,30 +261,39 @@ class ParquetLakeTarget:
         than one layer (merge-on-read). version → time travel to that
         committed snapshot."""
         m = self.manifest(version)
-        cur_schema = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
+        out, multi_layer = self._scan(m["buckets"], self._schema_of(m), buckets)
+        if resolve is None:
+            resolve = multi_layer
+        return self._resolve(out) if resolve else out
+
+    def _scan(
+        self,
+        buckets: dict,
+        schema: T.StructType,
+        which: list[int] | None = None,
+    ) -> tuple[DataFrame, bool]:
+        """Every layer of the selected buckets (all when ``which`` is None),
+        unresolved and aligned to ``schema``; and whether any selected
+        bucket holds more than one layer."""
         groups: dict[int, list[str]] = {}
         multi_layer = False
-        for b, entry in m["buckets"].items():
-            if buckets is not None and int(b) not in buckets:
+        for b, entry in buckets.items():
+            if which is not None and int(b) not in which:
                 continue
             layers = entry["layers"]
             multi_layer = multi_layer or len(layers) > 1
             for layer in layers:
                 groups.setdefault(layer["schema_id"], []).extend(layer["files"])
         if not groups:
-            return self.spark.createDataFrame(
-                [], self._internal_schema(cur_schema)
-            )
-        parts = []
-        for sid, files in groups.items():
-            df = self.spark.read.parquet(*files)
-            parts.append(self._align(df, cur_schema))
+            return self.spark.createDataFrame([], self._internal_schema(schema)), False
+        parts = [
+            self._align(self.spark.read.parquet(*files), schema)
+            for files in groups.values()
+        ]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
-        if resolve is None:
-            resolve = multi_layer
-        return self._resolve(out) if resolve else out
+        return out, multi_layer
 
     def read(self, version: int | None = None) -> DataFrame:
         """The logical table: live rows only, internal columns hidden.
@@ -487,7 +504,7 @@ class ParquetLakeTarget:
         columns / widened types). Old file groups are aligned lazily on read.
         Returns True if a new schema version was committed."""
         m = self.manifest()
-        cur = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
+        cur = self._schema_of(m)
         if cur.jsonValue() == new_schema.jsonValue():
             return False
         sid = max(int(k) for k in m["schemas"]) + 1
@@ -504,8 +521,7 @@ class ParquetLakeTarget:
         reduced: DataFrame,
         batch_id: int,
         stream_id: str = "default",
-        salted: bool = False,
-        salt_buckets: int = 16,
+        salt_buckets: int | None = None,
         transform_reduced=None,
         partial_set_col: str | None = None,
     ) -> MergeResult:
@@ -517,23 +533,39 @@ class ParquetLakeTarget:
         gate is scoped by stream_id — a new lineage re-applies its batches and
         the (ts, lsn) LWW guard makes that replay convergent, not corrupting.
 
+        The merge is one LWW reduce and one bucketed write. It reads the
+        target only when it must: on COW, which rewrites the affected
+        buckets, and for partial images. Otherwise (MOR, whole rows) the
+        write is the batch's one Spark action: its counts ride it through
+        ``observe`` and the per-bucket watermarks and key counts come from
+        the written files' parquet footers. MOR appends the written files
+        as a layer and compacts buckets past compact_threshold inline.
+
+        ``salt_buckets``: pre-reduce per (keys, salt) first, for hot-key
+        skew (lww_reduce).
+
+        ``transform_reduced``: a post-reduce payload transform (e.g.
+        normalization). It sees one row per key instead of per event, and
+        must be idempotent: committed rows pass through it again when COW
+        rewrites them. Ordering is safe because LWW winner selection reads
+        (ts, lsn, op), never the payload.
+
         ``partial_set_col``: the batch's events carry PARTIAL row images —
         the named array column lists the payload columns each event wrote
         (operators/lww.py lww_reduce_partial's contract). The merge then
         coalesces cells against the current table state: existing rows enter
         the reduce as full-image writes at their committed (ts, lsn), so a
         sparse update inherits every untouched cell. Consequences, by design:
-        - there is no no-read fast path — partial images NEED the old row,
-          so the affected buckets are always read. COW tables rewrite them;
-          MOR tables append a delta layer holding ONLY the touched keys'
-          resolved rows (untouched keys stay in their existing layers, and
-          the layer stack compacts past compact_threshold as usual);
+        - partial images NEED the old row, so the affected buckets are
+          always read. MOR tables append a delta layer holding ONLY the
+          touched keys' resolved rows (untouched keys stay in their
+          existing layers);
         - cell resolution is exact within a batch; ACROSS batches a late
           cell write resolves against the row's committed version at ROW
           granularity (the lake stores row versions, not per-cell versions —
           the Cassandra alternative would double storage), and such events
           are flagged in late_events;
-        - ``salted`` composes: the cell reduce's two-phase form pre-reduces
+        - salting composes: the cell reduce's two-phase form pre-reduces
           per (keys, salt) with the same per-cell struct maxes (associative),
           so hot-conversation skew is defused without losing cell orders.
         """
@@ -541,274 +573,146 @@ class ParquetLakeTarget:
         if stream_id == m.get("stream_id") and batch_id <= m["batch_id"]:
             return MergeResult(batch_id=batch_id, applied=False,
                                snapshot_version=m["version"])
+        empty = MergeResult(batch_id=batch_id, applied=True)
 
-        cur_schema = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
-        payload_cols = [f.name for f in cur_schema.fields if f.name not in MERGE_KEYS]
-
-        wm = {k: int(v) for k, v in m.get("watermarks", {}).items()}
-        if self.mode == "mor" and partial_set_col is None:
-            # single-Spark-job fast path: metrics ride the write via observe,
-            # per-bucket watermarks come from parquet footers
-            return self._merge_mor(
-                reduced, batch_id, stream_id, salted, salt_buckets,
-                m, cur_schema, payload_cols, wm, transform_reduced,
-            )
-        batch = reduced.withColumn("_b", self._bucket_col()).cache()
-        # late events = lsn at-or-below the bucket's committed high-watermark
-        # (duplicate/out-of-order replays); computed in the same single agg
-        # via a literal map — no per-bucket jobs.
-        if wm:
-            wm_map = F.create_map(
-                *[F.lit(x) for b, l in wm.items() for x in (int(b), l)]
-            )
-            late_col = F.sum(
-                F.when(
-                    F.col("lsn")
-                    <= F.coalesce(wm_map[F.col("_b")], F.lit(-(2**62))),
-                    1,
-                ).otherwise(0)
-            ).alias("n_late")
-        else:
-            late_col = F.sum(F.lit(0)).alias("n_late")
-        stats = batch.groupBy("_b").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("lsn").alias("max_lsn"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_del"),
-            F.count_distinct(*[F.col(k) for k in MERGE_KEYS]).alias("n_keys"),
-            late_col,
-        ).collect()
-        if not stats:
-            batch.unpersist()
-            m["version"] += 1
-            m["batch_id"] = batch_id
-            m["stream_id"] = stream_id
-            self._commit(m)
-            return MergeResult(batch_id=batch_id, applied=True,
-                               snapshot_version=m["version"])
-
-        affected = sorted(int(r["_b"]) for r in stats)
-        events_in = int(sum(r["n"] for r in stats))
-
-        cell_cols = [c for c in payload_cols if c != "ts"]
-
-        def reduce_events(ev: DataFrame) -> DataFrame:
-            if partial_set_col is not None:
-                from ..operators.lww import lww_reduce_partial
-
-                return lww_reduce_partial(
-                    ev, keys=MERGE_KEYS, order=LWW_ORDER,
-                    set_col=partial_set_col, payload=cell_cols,
-                    salt_buckets=salt_buckets if salted else None,
-                )
-            return (
-                lww_reduce_salted(
-                    ev, keys=MERGE_KEYS, order=LWW_ORDER, salt_buckets=salt_buckets
-                )
-                if salted
-                else lww_reduce(ev, keys=MERGE_KEYS, order=LWW_ORDER)
-            )
-
+        cur_schema = self._schema_of(m)
+        cell_cols = [
+            f.name for f in cur_schema.fields if f.name not in (*MERGE_KEYS, "ts")
+        ]
         ev_cols = ["op", "lsn", "ts", *MERGE_KEYS, *cell_cols]
         if partial_set_col is not None:
             ev_cols.append(partial_set_col)
-        batch_events = batch.drop("_b").select(*ev_cols)
+        batch = reduced.withColumn("_b", self._bucket_col())
+        batch_aggs = [
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_del"),
+            self._late_events(m.get("watermarks", {})),
+        ]
 
-        n_compacted = 0
-        # partial + MOR table: append a delta layer of ONLY the touched
-        # keys' resolved rows instead of rewriting whole buckets — the
-        # read-side whole-row resolution (_resolve) layers them correctly
-        # because a resolved row's (ts, _lsn) is >= every older version's
-        # (a batch of purely-stale events resolves to a byte-identical
-        # copy of the committed row, so even that tie is harmless)
-        partial_layering = partial_set_col is not None and self.mode == "mor"
-        # union current bucket contents (tombstones incl.) with the batch
-        target = self.read_internal(buckets=affected, resolve=False)
-        as_events = target.select(
-            F.when(F.col("_deleted"), F.lit("D"))
-            .otherwise(F.lit("U"))
-            .alias("op"),
-            F.col("_lsn").alias("lsn"),
-            F.col("ts"),
-            *MERGE_KEYS,
-            *[F.col(c) for c in cell_cols],
-        )
-        if partial_layering:
-            # the delta layer only needs the batch's keys; untouched keys
-            # stay in their existing layers untouched
-            as_events = as_events.join(
-                batch_events.select(*MERGE_KEYS).distinct(),
-                list(MERGE_KEYS),
-                "left_semi",
+        read_target = partial_set_col is not None or self.mode == "cow"
+        if read_target:
+            # per-bucket stats first: they name the buckets to read
+            batch = batch.cache()
+            stats = batch.groupBy("_b").agg(
+                *batch_aggs,
+                F.max("lsn").alias("max_lsn"),
+                F.count_distinct(*[F.col(k) for k in MERGE_KEYS]).alias("n_keys"),
+            ).collect()
+            if not stats:
+                batch.unpersist()
+                self._commit_snapshot(m, empty, stream_id)
+                return empty
+            affected = [int(r["_b"]) for r in stats]
+            events = batch.drop("_b").select(*ev_cols)
+            target, _ = self._scan(m["buckets"], cur_schema, affected)
+            committed = target.select(
+                F.when(F.col("_deleted"), F.lit("D")).otherwise(F.lit("U")).alias("op"),
+                F.col("_lsn").alias("lsn"),
+                F.col("ts"),
+                *MERGE_KEYS,
+                *cell_cols,
             )
-        if partial_set_col is not None:
-            # committed rows are RESOLVED states: they enter the cell
-            # reduce as full-image writes at their committed (ts, lsn)
-            # (tombstones' set list is never consulted for op='D')
-            as_events = as_events.withColumn(
-                partial_set_col, F.array(*[F.lit(c) for c in cell_cols])
-            )
-        merged = reduce_events(as_events.unionByName(batch_events))
-        if transform_reduced is not None:
-            # post-reduce payload transform (e.g. normalization): runs on one
-            # row per key instead of per event; must be idempotent — existing
-            # table rows pass through it again on COW rewrites
-            merged = transform_reduced(merged)
-
-        data = merged.select(
-            *[F.col(f.name) for f in cur_schema.fields],
-            F.col("lsn").alias("_lsn"),
-            (F.col("op") == "D").alias("_deleted"),
-        )
-        files_by_bucket = self._write_file_group(data)
-
-        n_deleted = int(sum(r["n_del"] for r in stats))
-        late = int(sum(r["n_late"] for r in stats))
-        n_keys = int(sum(r["n_keys"] for r in stats))
-        for r in stats:
-            b = str(int(r["_b"]))
-            wm[b] = max(wm.get(b, -1), int(r["max_lsn"]))
-        batch.unpersist()
-
-        new_buckets = {b: dict(e) for b, e in m["buckets"].items()}
-        for b, files in files_by_bucket.items():
-            layer = {"files": files, "schema_id": m["current_schema_id"]}
-            if partial_layering and b in new_buckets:
-                new_buckets[b]["layers"] = new_buckets[b]["layers"] + [layer]
-            else:
-                new_buckets[b] = {"layers": [layer]}
-        if partial_layering:
-            over = [
-                int(b)
-                for b, e in new_buckets.items()
-                if len(e["layers"]) > self.compact_threshold
-            ]
-            if over:
-                new_buckets.update(
-                    self._compact_layers(new_buckets, over, cur_schema)
+            if self.mode == "mor":
+                # (partial images) the delta layer only needs the batch's
+                # keys; the read-side whole-row resolution layers it
+                # correctly because a resolved row's (ts, _lsn) is >= every
+                # older version's (a batch of purely-stale events resolves
+                # to a byte-identical copy of the committed row)
+                committed = committed.join(
+                    events.select(*MERGE_KEYS).distinct(),
+                    list(MERGE_KEYS),
+                    "left_semi",
                 )
-                n_compacted = len(over)
+            if partial_set_col is not None:
+                # committed rows are RESOLVED states: they enter the cell
+                # reduce as full-image writes at their committed (ts, lsn)
+                # (tombstones' set list is never consulted for op='D')
+                committed = committed.withColumn(
+                    partial_set_col, F.array(*[F.lit(c) for c in cell_cols])
+                )
+            events = committed.unionByName(events)
+        else:
+            obs = Observation(f"cdc-batch-{batch_id}")
+            events = batch.observe(obs, *batch_aggs).drop("_b").select(*ev_cols)
+
+        if partial_set_col is None:
+            merged = lww_reduce(
+                events, keys=MERGE_KEYS, order=LWW_ORDER, salt_buckets=salt_buckets
+            )
+        else:
+            merged = lww_reduce_partial(
+                events, keys=MERGE_KEYS, order=LWW_ORDER,
+                set_col=partial_set_col, payload=cell_cols,
+                salt_buckets=salt_buckets,
+            )
+        if transform_reduced is not None:
+            merged = transform_reduced(merged)
+        files_by_bucket = self._write_file_group(
+            merged.select(
+                *[F.col(f.name) for f in cur_schema.fields],
+                F.col("lsn").alias("_lsn"),
+                (F.col("op") == "D").alias("_deleted"),
+            )
+        )
+
+        if read_target:
+            batch.unpersist()
+            n, n_del, n_late, n_keys = (
+                sum(int(r[c]) for r in stats)
+                for c in ("n", "n_del", "n_late", "n_keys")
+            )
+            max_lsn = {str(int(r["_b"])): int(r["max_lsn"]) for r in stats}
+        else:
+            if not files_by_bucket:
+                self._commit_snapshot(m, empty, stream_id)
+                return empty
+            obs_row = obs.get
+            n, n_del, n_late = (int(obs_row[c] or 0) for c in ("n", "n_del", "n_late"))
+            n_keys, max_lsn = self._footer_stats(files_by_bucket)
 
         res = MergeResult(
             batch_id=batch_id,
             applied=True,
-            events_in=events_in,
+            events_in=n,
             # with raw (unreduced) input these are touched-keys / delete-event
             # counts; with pre-reduced input they are exact per-key counts
-            keys_upserted=n_keys - n_deleted if events_in == n_keys else n_keys,
-            keys_deleted=n_deleted,
-            late_events=late,
-            buckets_rewritten=len(affected),
-            buckets_compacted=n_compacted,
+            keys_upserted=n_keys - n_del if n == n_keys else n_keys,
+            keys_deleted=n_del,
+            late_events=n_late,
+            buckets_rewritten=len(files_by_bucket),
         )
-        m["version"] += 1
-        m["batch_id"] = batch_id
-        m["stream_id"] = stream_id
-        m["buckets"] = new_buckets
-        m["watermarks"] = wm
-        m["metrics"] = {
-            "events_in": res.events_in,
-            "keys_upserted": res.keys_upserted,
-            "keys_deleted": res.keys_deleted,
-            "late_events": res.late_events,
-            "buckets_rewritten": res.buckets_rewritten,
-            "buckets_compacted": res.buckets_compacted,
-        }
-        res.snapshot_version = self._commit(m)
+        self._commit_snapshot(m, res, stream_id, files_by_bucket, max_lsn)
         return res
 
-    def _merge_mor(
-        self,
-        reduced: DataFrame,
-        batch_id: int,
-        stream_id: str,
-        salted: bool,
-        salt_buckets: int,
-        m: dict,
-        cur_schema: T.StructType,
-        payload_cols: list[str],
-        wm: dict[str, int],
-        transform_reduced=None,
-    ) -> MergeResult:
-        """Merge-on-read fast path: ONE Spark job per batch.
+    @staticmethod
+    def _late_events(watermarks: dict) -> F.Column:
+        """Aggregate counting late events: lsn at-or-below the bucket's
+        committed high-watermark (duplicate/out-of-order replays). One
+        literal map, so no per-bucket jobs."""
+        floor = F.lit(-(2**62))
+        if watermarks:
+            wm_map = F.create_map(
+                *[F.lit(x) for b, l in watermarks.items() for x in (int(b), int(l))]
+            )
+            floor = F.coalesce(wm_map[F.col("_b")], floor)
+        return F.sum(F.when(F.col("lsn") <= floor, 1).otherwise(0)).alias("n_late")
 
-        - the delta write is the only action; batch metrics (event count,
-          delete events, late events) ride it via DataFrame.observe
-        - per-bucket LSN watermarks and touched-key counts come from the
-          written delta files' parquet footers (driver-side, no scan)
-        - no target read at all: reads resolve LWW across delta layers;
-          buckets past compact_threshold layers are compacted inline
-        """
-        from pyspark.sql import Observation
+    @staticmethod
+    def _footer_stats(
+        files_by_bucket: dict[str, list[str]],
+    ) -> tuple[int, dict[str, int]]:
+        """Rows written and the per-bucket max ``_lsn``, from parquet footers
+        (driver-side, no scan). Footers are read concurrently: this loop is
+        serial driver cost that otherwise caps scaling efficiency at high
+        parallelism."""
+        from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
 
-        batch = reduced.withColumn("_b", self._bucket_col())
-        if wm:
-            wm_map = F.create_map(
-                *[F.lit(x) for b, l in wm.items() for x in (int(b), l)]
-            )
-            late_expr = F.sum(
-                F.when(
-                    F.col("lsn")
-                    <= F.coalesce(wm_map[F.col("_b")], F.lit(-(2**62))),
-                    1,
-                ).otherwise(0)
-            ).alias("n_late")
-        else:
-            late_expr = F.max(F.lit(0)).alias("n_late")
-        obs = Observation(f"cdc-batch-{batch_id}")
-        observed = batch.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("n_del"),
-            late_expr,
-        )
-        ev_cols = ["op", "lsn", "ts", *MERGE_KEYS] + [
-            c for c in payload_cols if c != "ts"
-        ]
-        batch_events = observed.drop("_b").select(*ev_cols)
-        merged = (
-            lww_reduce_salted(
-                batch_events, keys=MERGE_KEYS, order=LWW_ORDER,
-                salt_buckets=salt_buckets,
-            )
-            if salted
-            else lww_reduce(batch_events, keys=MERGE_KEYS, order=LWW_ORDER)
-        )
-        if transform_reduced is not None:
-            # normalize AFTER the reduce: the Python/Arrow stage then sees one
-            # row per key, not per event (~10x less at update-heavy batches).
-            # Ordering is safe — LWW winner selection uses (ts, lsn, op), not
-            # the payload, and the transform is idempotent.
-            merged = transform_reduced(merged)
-        data = merged.select(
-            *[F.col(f.name) for f in cur_schema.fields],
-            F.col("lsn").alias("_lsn"),
-            (F.col("op") == "D").alias("_deleted"),
-        )
-        files_by_bucket = self._write_file_group(data)  # the one action
-        stats = obs.get
-        events_in = int(stats["n"] or 0)
-
-        if events_in == 0:
-            m["version"] += 1
-            m["batch_id"] = batch_id
-            m["stream_id"] = stream_id
-            self._commit(m)
-            return MergeResult(batch_id=batch_id, applied=True,
-                               snapshot_version=m["version"])
-
-        # per-bucket watermark (max _lsn) + touched keys from parquet footers
-        # (footers read concurrently — this loop is driver-side serial cost
-        # that otherwise caps scaling efficiency at high parallelism)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _footer(fpath: str) -> tuple[int, int]:
+        def footer(fpath: str) -> tuple[int, int]:
             md = pq.ParquetFile(fpath).metadata
             col_idx = next(
-                i
-                for i in range(md.num_columns)
-                if md.schema.column(i).name == "_lsn"
+                i for i in range(md.num_columns) if md.schema.column(i).name == "_lsn"
             )
             mx = -1
             for rg in range(md.num_row_groups):
@@ -817,91 +721,85 @@ class ParquetLakeTarget:
                     mx = max(mx, int(st.max))
             return md.num_rows, mx
 
-        all_files = [
-            (b, f) for b, files in files_by_bucket.items() for f in files
-        ]
+        all_files = [(b, f) for b, files in files_by_bucket.items() for f in files]
         with ThreadPoolExecutor(max_workers=16) as pool:
-            footers = list(pool.map(lambda bf: _footer(bf[1]), all_files))
-        n_keys = sum(nr for nr, _ in footers)
+            footers = list(pool.map(lambda bf: footer(bf[1]), all_files))
+        max_lsn: dict[str, int] = {}
         for (b, _), (_, mx) in zip(all_files, footers):
-            wm[b] = max(wm.get(b, -1), mx)
+            max_lsn[b] = max(max_lsn.get(b, -1), mx)
+        return sum(nr for nr, _ in footers), max_lsn
 
-        new_buckets = {b: dict(e) for b, e in m["buckets"].items()}
+    def _commit_snapshot(
+        self,
+        m: dict,
+        res: MergeResult | None = None,
+        stream_id: str | None = None,
+        files_by_bucket: dict[str, list[str]] | None = None,
+        max_lsn: dict[str, int] | None = None,
+        compact: list[int] | None = None,
+    ) -> int:
+        """Commit the snapshot after manifest ``m``, updating it in place.
+
+        - Each new file group adds a layer to its bucket on MOR and
+          replaces the bucket on COW.
+        - ``compact`` buckets are LWW-resolved into one layer; by default,
+          once new files landed, every MOR bucket past compact_threshold.
+        - A batch's ``res`` advances the batch id of ``stream_id``. When the
+          batch applied events, its per-bucket ``max_lsn`` raises the
+          watermarks and its counts become the manifest metrics; an empty
+          batch leaves both as they were. ``res`` receives
+          buckets_compacted and snapshot_version.
+
+        Returns the number of buckets compacted."""
+        files_by_bucket = files_by_bucket or {}
+        buckets = {b: dict(e) for b, e in m["buckets"].items()}
         for b, files in files_by_bucket.items():
             layer = {"files": files, "schema_id": m["current_schema_id"]}
-            if b not in new_buckets:
-                new_buckets[b] = {"layers": [layer]}
+            if self.mode == "mor" and b in buckets:
+                buckets[b]["layers"] = buckets[b]["layers"] + [layer]
             else:
-                new_buckets[b]["layers"] = new_buckets[b]["layers"] + [layer]
-
-        over = [
-            int(b)
-            for b, e in new_buckets.items()
-            if len(e["layers"]) > self.compact_threshold
-        ]
-        if over:
-            new_buckets.update(
-                self._compact_layers(new_buckets, over, cur_schema)
-            )
-
-        n_del = int(stats["n_del"] or 0)
-        res = MergeResult(
-            batch_id=batch_id,
-            applied=True,
-            events_in=events_in,
-            keys_upserted=n_keys - n_del if events_in == n_keys else n_keys,
-            keys_deleted=n_del,
-            late_events=int(stats["n_late"] or 0),
-            buckets_rewritten=len(files_by_bucket),
-            buckets_compacted=len(over),
-        )
+                buckets[b] = {"layers": [layer]}
+        if compact is None and files_by_bucket and self.mode == "mor":
+            compact = [
+                int(b)
+                for b, e in buckets.items()
+                if len(e["layers"]) > self.compact_threshold
+            ]
+        compact = compact or []
+        if compact:
+            # resolve the layer stacks, tombstones retained for late-event
+            # correctness
+            layers, _ = self._scan(buckets, self._schema_of(m), compact)
+            for b, files in self._write_file_group(self._resolve(layers)).items():
+                buckets[b] = {
+                    "layers": [{"files": files, "schema_id": m["current_schema_id"]}]
+                }
         m["version"] += 1
-        m["batch_id"] = batch_id
-        m["stream_id"] = stream_id
-        m["buckets"] = new_buckets
-        m["watermarks"] = wm
-        m["metrics"] = {
-            "events_in": res.events_in,
-            "keys_upserted": res.keys_upserted,
-            "keys_deleted": res.keys_deleted,
-            "late_events": res.late_events,
-            "buckets_rewritten": res.buckets_rewritten,
-            "buckets_compacted": res.buckets_compacted,
-        }
-        res.snapshot_version = self._commit(m)
-        return res
-
-    def _compact_layers(
-        self,
-        buckets: dict,
-        which: list[int],
-        cur_schema: T.StructType,
-    ) -> dict:
-        """Rewrite the given buckets' layer stacks into single LWW-resolved
-        base layers (tombstones retained for late-event correctness)."""
-        groups: dict[int, list[str]] = {}
-        for b in which:
-            for layer in buckets[str(b)]["layers"]:
-                groups.setdefault(layer["schema_id"], []).extend(layer["files"])
-        parts = []
-        for sid, files in groups.items():
-            parts.append(self._align(self.spark.read.parquet(*files), cur_schema))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        resolved = self._resolve(df)
-        files_by_bucket = self._write_file_group(resolved)
-        cur_sid = int(self.manifest()["current_schema_id"])
-        return {
-            sb: {"layers": [{"files": files_by_bucket[sb], "schema_id": cur_sid}]}
-            for sb in files_by_bucket
-        }
+        m["buckets"] = buckets
+        if res is not None:
+            m["batch_id"] = res.batch_id
+            m["stream_id"] = stream_id
+            res.buckets_compacted = len(compact)
+            if res.events_in:
+                wm = {k: int(v) for k, v in m.get("watermarks", {}).items()}
+                for b, mx in max_lsn.items():
+                    wm[b] = max(wm.get(b, -1), mx)
+                m["watermarks"] = wm
+                m["metrics"] = {
+                    k: getattr(res, k)
+                    for k in ("events_in", "keys_upserted", "keys_deleted",
+                              "late_events", "buckets_rewritten",
+                              "buckets_compacted")
+                }
+        version = self._commit(m)
+        if res is not None:
+            res.snapshot_version = version
+        return len(compact)
 
     def compact(self, buckets: list[int] | None = None) -> int:
         """Explicit compaction API (maintenance job): resolve layer stacks.
         Returns number of buckets compacted."""
         m = self.manifest()
-        cur_schema = T.StructType.fromJson(m["schemas"][str(m["current_schema_id"])])
         which = [
             int(b)
             for b, e in m["buckets"].items()
@@ -909,11 +807,7 @@ class ParquetLakeTarget:
         ]
         if not which:
             return 0
-        new_entries = self._compact_layers(m["buckets"], which, cur_schema)
-        m["buckets"].update(new_entries)
-        m["version"] += 1
-        self._commit(m)
-        return len(which)
+        return self._commit_snapshot(m, compact=which)
 
     # ------------------------------------------------------------- cleanup
 

@@ -1191,3 +1191,56 @@ def test_cli_index_probe_max_bucket(spark, tmp_path, capsys):
     assert probe("--max-bucket", "20") == 0
     # guard disabled: all 30 copies match
     assert probe("--max-bucket", "0") == 30
+
+
+def test_mongo_stream_cell_merge_and_whole_row_refusals(spark, tmp_path, capsys):
+    """run_stream over oplog files with partial_set_col applies $set
+    patches through the cell merge; the two whole-row consumers — a
+    stream without partial_set_col and `run pipeline --input
+    envelopes:mongo:PATH` — refuse the dialect with one message."""
+    import re
+
+    import pytest as _pytest
+
+    from kettle_jena_plugins_spark.run import main
+    from kettle_jena_plugins_spark.sources.envelopes import (
+        sparse_dialect_message,
+    )
+    from kettle_jena_plugins_spark.streaming.apply import (
+        CDCConfig,
+        run_stream,
+    )
+    from kettle_jena_plugins_spark.targets.parquet_lake import (
+        ParquetLakeTarget,
+    )
+
+    ins = ('{"ts":{"$timestamp":{"t":1767225601,"i":1}},"op":"i",'
+           '"ns":"app.transcripts","o":{"conv_id":"c1","turn_idx":0,'
+           '"role":"user","text":"hi","tool":"calc"}}')
+    patch = ('{"ts":{"$timestamp":{"t":1767225602,"i":2}},"op":"u",'
+             '"ns":"app.transcripts","o":{"$set":{"text":"edited"}},'
+             '"o2":{"conv_id":"c1","turn_idx":0}}')
+    wal = tmp_path / "wal"
+    wal.mkdir()
+    (wal / "b0.jsonl").write_text(ins + "\n")
+    (wal / "b1.jsonl").write_text(patch + "\n")
+    t = ParquetLakeTarget(spark, str(tmp_path / "tbl"), n_buckets=2)
+    t.create()
+    run_stream(spark, str(wal), t, str(tmp_path / "ck"),
+               cfg=CDCConfig(partial_set_col="set_cols"),
+               max_files_per_trigger=1, envelope_dialect="mongo",
+               source_table="transcripts")
+    assert [(r["role"], r["text"], r["tool"]) for r in t.read().collect()] == [
+        ("user", "edited", "calc")]
+    msg = sparse_dialect_message("mongo")
+    with _pytest.raises(ValueError, match=re.escape(msg)):
+        run_stream(spark, str(wal), t, str(tmp_path / "ck2"),
+                   cfg=CDCConfig(), envelope_dialect="mongo")
+    spec = tmp_path / "spec.json"
+    spec.write_text('{"steps": [{"type": "filter", "condition": "true"}]}')
+    capsys.readouterr()
+    with _pytest.raises(SystemExit):
+        main(["pipeline", "--spec", str(spec),
+              "--input", f"envelopes:mongo:{wal}"])
+    assert msg in capsys.readouterr().err
+    t.drop()

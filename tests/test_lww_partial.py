@@ -186,3 +186,28 @@ def test_matches_python_cell_reference_on_random_streams(spark):
             for r in red.filter("op != 'D'").collect()
         }
         assert got_salted == expected, f"salted, seed {seed}"
+
+
+def test_delete_update_tie_on_ts_and_lsn(spark):
+    """A D and a U sharing (ts, lsn) — only a malformed log has them —
+    resolve differently in the two reducers, pinned as they are: whole-row
+    LWW keeps the U (op ends the order, 'U' > 'D'); the cell reduce keeps
+    the D (a write must be strictly newer than the tombstone, the same
+    strict comparison the cdc_lww_partial and cdc_mongo_parse DuckDB
+    oracles encode)."""
+    from kettle_jena_plugins_spark.operators.lww import (
+        lww_reduce_partial,
+        lww_state,
+    )
+
+    log = make(spark, [
+        ev("I", 1, 1, "a", 0, role="user", text="x", tool="t",
+           set_cols=("role", "text", "tool")),
+        ev("U", 2, 2, "a", 0, text="y", set_cols=("text",)),
+        ev("D", 2, 2, "a", 0),
+    ])
+    whole = lww_state(log.drop("set_cols")).collect()
+    assert [(r["op"], r["lsn"], r["text"]) for r in whole] == [("U", 2, "y")]
+    cells = lww_reduce_partial(log).collect()
+    assert [(r["op"], r["lsn"], r["text"]) for r in cells] == [("D", 2, None)]
+    assert rows_by_key(lww_state_partial(log)) == {}

@@ -10,6 +10,7 @@ import datetime as dt
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from kettle_jena_plugins_spark.model import CHANGE_EVENT_SCHEMA, CHANGE_EVENT_SCHEMA_V2
 from kettle_jena_plugins_spark.operators.lww import lww_state
@@ -331,3 +332,166 @@ def test_lww_state_matches_python_reference_on_random_streams(spark):
             for r in lww_state(make_events(spark, stream)).collect()
         }
         assert got == expected, f"seed {seed}"
+
+
+# ------------------------------------------------ merge characterization
+#
+# One fixed multi-batch log applied through every merge shape (cow/mor ×
+# whole-row/partial-image), pinning every MergeResult field, the
+# manifest's watermarks and metrics, the per-bucket layer depth and the
+# final internal state. Bucket layout at n_buckets=2: a, b, c, d → 0/1 as
+# the layers column shows (c alone in bucket 0 in batch 3).
+
+_CELLS = ("role", "text", "tool")
+_FULL = {"role": "user", "tool": None}
+CHAR_LOG = [
+    # 0: insert burst + a delete (d, 0) in the same batch
+    [("I", 1, 1, "a", 0, {**_FULL, "text": " hi   there "}),
+     ("I", 2, 2, "a", 1, {"role": "bot", "text": "yo", "tool": "calc"}),
+     ("I", 3, 3, "b", 0, {**_FULL, "text": "b0"}),
+     ("I", 4, 4, "c", 0, {**_FULL, "text": "c0"}),
+     ("I", 5, 5, "d", 0, {**_FULL, "text": "d0"}),
+     ("D", 6, 6, "d", 0, {})],
+    # 1: late duplicate of lsn 2 (below its bucket's watermark) + a
+    # sparse update + a new key
+    [("I", 2, 2, "a", 1, {"role": "bot", "text": "yo", "tool": "calc"}),
+     ("U", 7, 7, "b", 0, {"text": "b1"}),
+     ("I", 8, 8, "e", 0, {**_FULL, "text": "e0"})],
+    # 2: empty
+    [],
+    # 3: out-of-order pair: the highest lsn (10) loses on ts
+    [("U", 9, 20, "c", 0, {"text": "c-win"}),
+     ("U", 10, 15, "c", 0, {"text": "c-lose"})],
+    # 4, 5: more layers (MOR crosses compact_threshold=2)
+    [("U", 11, 21, "a", 0, {"tool": "t"}),
+     ("U", 12, 22, "b", 0, {"role": "bot"}),
+     ("D", 13, 23, "e", 0, {})],
+    [("U", 14, 24, "a", 1, {"text": "a1b"}),
+     ("I", 15, 25, "d", 0, {**_FULL, "text": "d1"})],
+]
+
+# per batch: (batch_id, events_in, keys_upserted, keys_deleted,
+# late_events, buckets_rewritten, buckets_compacted, snapshot_version,
+# watermarks (bucket 0, bucket 1), layers (bucket 0, bucket 1))
+_COW = [
+    (0, 6, 5, 1, 0, 2, 0, 1, (6, 3), (1, 1)),
+    (1, 3, 3, 0, 1, 2, 0, 2, (6, 8), (1, 1)),
+    (2, 0, 0, 0, 0, 0, 0, 3, (6, 8), (1, 1)),
+    (3, 2, 1, 0, 0, 1, 0, 4, (10, 8), (1, 1)),
+    (4, 3, 2, 1, 0, 2, 0, 5, (11, 13), (1, 1)),
+    (5, 2, 2, 0, 0, 1, 0, 6, (15, 13), (1, 1)),
+]
+CHAR_EXPECTED = {
+    ("cow", False): _COW,
+    ("cow", True): _COW,
+    # the read path takes each bucket's watermark from the raw events
+    # (batch 3: lsn 10, the loser); the MOR whole-row path reads no
+    # target and takes it from the written winners (lsn 9). Its empty
+    # batch is applied in test_mor_whole_row_empty_batch_commits.
+    ("mor", False): [
+        (0, 6, 5, 1, 0, 2, 0, 1, (6, 3), (1, 1)),
+        (1, 3, 3, 0, 1, 2, 0, 2, (6, 8), (2, 2)),
+        (3, 2, 1, 0, 0, 1, 1, 3, (9, 8), (1, 2)),
+        (4, 3, 2, 1, 0, 2, 1, 4, (11, 13), (2, 1)),
+        (5, 2, 2, 0, 0, 1, 1, 5, (15, 13), (1, 1)),
+    ],
+    ("mor", True): [
+        (0, 6, 5, 1, 0, 2, 0, 1, (6, 3), (1, 1)),
+        (1, 3, 3, 0, 1, 2, 0, 2, (6, 8), (2, 2)),
+        (2, 0, 0, 0, 0, 0, 0, 3, (6, 8), (2, 2)),
+        (3, 2, 1, 0, 0, 1, 1, 4, (10, 8), (1, 2)),
+        (4, 3, 2, 1, 0, 2, 1, 5, (11, 13), (2, 1)),
+        (5, 2, 2, 0, 0, 1, 1, 6, (15, 13), (1, 1)),
+    ],
+}
+# final resolved rows incl. tombstones: (conv, turn, role, text, tool,
+# _lsn, _deleted); whole-row events null the cells they do not carry,
+# partial images inherit them
+CHAR_FINAL = {
+    False: [("a", 0, None, None, "t", 11, False),
+            ("a", 1, None, "a1b", None, 14, False),
+            ("b", 0, "bot", None, None, 12, False),
+            ("c", 0, None, "c-win", None, 9, False),
+            ("d", 0, "user", "d1", None, 15, False),
+            ("e", 0, None, None, None, 13, True)],
+    True: [("a", 0, "user", "hi there", "t", 11, False),
+           ("a", 1, "bot", "a1b", "calc", 14, False),
+           ("b", 0, "bot", "b1", None, 12, False),
+           ("c", 0, "user", "c-win", None, 9, False),
+           ("d", 0, "user", "d1", None, 15, False),
+           ("e", 0, None, None, None, 13, True)],
+}
+_METRIC_FIELDS = ("events_in", "keys_upserted", "keys_deleted",
+                  "late_events", "buckets_rewritten", "buckets_compacted")
+
+
+def _char_events(spark, batch, partial):
+    schema = CHANGE_EVENT_SCHEMA
+    if partial:
+        schema = T.StructType([*schema.fields, T.StructField(
+            "set_cols", T.ArrayType(T.StringType()), True)])
+    rows = []
+    for op, lsn, ts, conv, turn, cells in batch:
+        row = (op, lsn, T0 + dt.timedelta(seconds=ts), conv, turn,
+               *[cells.get(c) for c in _CELLS])
+        rows.append((*row, list(cells)) if partial else row)
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("partial", [False, True], ids=["whole", "partial"])
+def test_merge_characterization(spark, tmp_path, mode, partial):
+    t = ParquetLakeTarget(spark, str(tmp_path / "tbl"), n_buckets=2,
+                          mode=mode, compact_threshold=2)
+    t.create()
+    cfg = CDCConfig(partial_set_col="set_cols" if partial else None)
+    want_batches = iter(CHAR_EXPECTED[(mode, partial)])
+    metrics = None
+    for i, batch in enumerate(CHAR_LOG):
+        if not batch and (mode, partial) == ("mor", False):
+            continue
+        res = apply_batch(t, _char_events(spark, batch, partial), i, cfg)
+        (bid, *counts, version, wm, layers) = next(want_batches)
+        assert res.applied and res.batch_id == bid == i
+        got = [getattr(res, f) for f in _METRIC_FIELDS]
+        assert (got, res.snapshot_version) == (counts, version), i
+        assert res.extra == {"dead_letter_rows": 0,
+                             "late_keys": res.late_events}, i
+        m = t.manifest()
+        assert (m["version"], m["batch_id"]) == (version, i)
+        assert m["watermarks"] == {"0": wm[0], "1": wm[1]}, i
+        assert {b: len(e["layers"]) for b, e in m["buckets"].items()} == {
+            "0": layers[0], "1": layers[1]}, i
+        if res.events_in:
+            metrics = dict(zip(_METRIC_FIELDS, counts))
+        # an empty batch commits its id but keeps the last batch's metrics
+        assert m["metrics"] == metrics, i
+    assert next(want_batches, None) is None
+    final = sorted(
+        (r["conv_id"], r["turn_idx"], r["role"], r["text"], r["tool"],
+         r["_lsn"], r["_deleted"])
+        for r in t.read_internal(resolve=True).collect()
+    )
+    assert final == CHAR_FINAL[partial]
+    t.drop()
+
+
+def test_mor_whole_row_empty_batch_commits(spark, tmp_path):
+    """An empty batch on the path that reads no target commits its batch
+    id like every other path: a new snapshot, and no new layer,
+    watermark or metrics. With the default config (normalize on) Spark
+    reports no observed metrics for an empty batch, so the merge must
+    tell it is empty from the write."""
+    t = ParquetLakeTarget(spark, str(tmp_path / "tbl"), n_buckets=2, mode="mor")
+    t.create()
+    apply_batch(t, make_events(spark, [ev("I", 1, 1, "a", 0, text="x")]), 0)
+    before = t.manifest()
+    res = apply_batch(t, make_events(spark, []), 1)
+    after = t.manifest()
+    assert (res.applied, res.events_in, res.snapshot_version) == (
+        True, 0, before["version"] + 1)
+    assert after["batch_id"] == 1
+    for k in ("buckets", "watermarks", "metrics"):
+        assert after[k] == before[k], k
+    assert state(t) == {("a", 0): ("user", "x", None)}
+    t.drop()

@@ -151,13 +151,7 @@ def test_set_cols_mask_never_evolves_target_schema(spark, target):
     assert "set_cols" not in [f.name for f in target.schema().fields]
 
 
-def test_partial_rejects_pre_reduce_composes_with_salted(spark, target):
-    df = make(spark, [ev("I", 1, 1, "a", 0, role="u",
-                         set_cols=("role",))])
-    with pytest.raises(ValueError, match="pre_reduce"):
-        apply_batch(target, df, 0,
-                    cfg=CDCConfig(partial_set_col="set_cols",
-                                  pre_reduce=True))
+def test_partial_composes_with_salted(spark, target):
     # salted composes: the cell reduce pre-reduces per (keys, salt) with
     # the same associative struct maxes — hot-key path, same semantics
     salted_cfg = CDCConfig(normalize=False, partial_set_col="set_cols",
